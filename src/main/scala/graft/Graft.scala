@@ -27,14 +27,15 @@ import graft.sources.Io
   *
   * Errors: a failing UDF raises `UdfFailure(inputIndex, cause)` — the
   * analog of `exc.burla_input_index`. Oversized payloads raise
-  * `FunctionTooBig` / `InputTooBig` with the reference's limits.
+  * `FunctionTooBig` / `InputTooBig` with the reference's limits. Inputs
+  * and outputs must be `java.io.Serializable` (the Spark RDD contract).
   */
 object Graft {
 
   /** A tuned session (AQE, UTC, extensions, ns-timestamp handling). */
   def session(appName: String = "graft"): SparkSession = GraftSession.get(appName)
 
-  // ---- the reference's operator, all four modes ----
+  // ---- the reference's operator, every mode ----
 
   /** Per-call resource requirements, mirroring the reference's
     * `func_cpu=`/`func_ram=`/`func_gpu=` keyword surface
@@ -118,10 +119,6 @@ object Graft {
       resources: ParallelMap.Resources = ParallelMap.Resources()
   )(f: I => Seq[J])(g: J => O): Seq[O] =
     ParallelMap.runNested(spark, inputs, maxParallelism, resources)(f)(g)
-
-  /** Bulk path: same semantics over a Dataset, no driver materialization. */
-  def mapDataset[I, O: org.apache.spark.sql.Encoder](ds: Dataset[I])(f: I => O): Dataset[O] =
-    ParallelMap.mapDataset(ds)(f)
 
   // ---- storage ----
 

@@ -3,7 +3,8 @@ package graft.operators
 import scala.reflect.ClassTag
 import scala.util.{Failure, Success, Try}
 
-import org.apache.spark.sql.{Dataset, Encoder, Encoders, SparkSession}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.SparkSession
 
 /** A UDF raised on a specific input. Mirrors the reference's error
   * attribution contract — the original exception is re-raised client-side
@@ -61,11 +62,13 @@ final case class InputTooBig(inputIndex: Long, estimatedBytes: Long, limitBytes:
   *   - tuple-unpack calling convention (:553-556) is native in Scala —
   *     pass `{ case (a, b) => ... }`;
   *   - first UDF exception re-raised with input attribution (UdfFailure);
-  *   - `generator=True` => `stream(...)`: a lazy iterator with
-  *     one-partition-at-a-time backpressure (toLocalIterator), the analog
-  *     of the reference's 50%-RAM result-queue backpressure
-  *     (node_service worker_client.py:28,792-793);
-  *   - `max_parallelism` => explicit partition count.
+  *   - `generator=True` => `stream(...)`: a lazy iterator yielding each
+  *     partition's results as it completes, with a `window` of partitions
+  *     in flight — the analog of the reference's 50%-RAM result-queue
+  *     backpressure (node_service worker_client.py:28,792-793);
+  *   - `max_parallelism` => explicit partition count;
+  *   - the client-side hot-spot shuffle of `(idx, input)` pairs
+  *     (:312-313) => a round-robin deal on the driver (indexedInputs).
   *
   * What Spark absorbs rather than re-implements (SURVEY.md §2.2-2.3): work
   * stealing (P7) is the task scheduler; chunking (P2) is partition
@@ -74,8 +77,12 @@ final case class InputTooBig(inputIndex: Long, estimatedBytes: Long, limitBytes:
   * (L4) is not expressible from executors — compose on the driver.
   *
   * Inputs/outputs are opaque to the engine (the reference moves pickled
-  * blobs; SURVEY.md §1.2), so encoders are Kryo — schema-free by design.
-  * For schema-ful pipelines use the DataFrame surface instead.
+  * blobs; SURVEY.md §1.2) and must be `java.io.Serializable` — the Spark
+  * RDD contract. A non-serializable input fails the job on the driver
+  * when its task is serialized. Every mode maps one RDD built by
+  * indexedInputs: a single stage, no Spark shuffle (runNested adds its one
+  * deliberate rebalance). For schema-ful pipelines use the DataFrame
+  * surface instead.
   */
 object ParallelMap {
 
@@ -106,9 +113,6 @@ object ParallelMap {
     require(funcGpus >= 0 && funcRamGb >= 0, "resource amounts must be >= 0")
     def isDefault: Boolean = funcCpus == 1 && funcGpus == 0 && funcRamGb == 0
   }
-
-  private def kryoPair[T: ClassTag]: Encoder[(Long, T)] =
-    Encoders.kryo[(Long, T)]
 
   /** Concurrency cap implied by the resource request — LOCAL MODE ONLY:
     * on a cluster the request becomes a TaskResourceProfile (see
@@ -143,11 +147,7 @@ object ParallelMap {
   /** Attach a stage-level TaskResourceProfile where the cluster manager
     * supports it; identity in local mode (which cannot run task profiles —
     * there the request is enforced via the slices cap instead). */
-  private def applyResources[T: ClassTag](
-      spark: SparkSession,
-      rdd: org.apache.spark.rdd.RDD[T],
-      r: Resources
-  ): org.apache.spark.rdd.RDD[T] =
+  private def applyResources[T](spark: SparkSession, rdd: RDD[T], r: Resources): RDD[T] =
     if (r.isDefault || spark.sparkContext.isLocal) rdd
     else {
       import org.apache.spark.resource.{ResourceProfileBuilder, TaskResourceRequests}
@@ -161,10 +161,12 @@ object ParallelMap {
   val MaxInputBytes: Long = 200L * 1000 * 1000
   private val SizeCheckSample = 10000
 
-  private def guardSizes[I, O](inputs: Seq[I], f: I => O): Unit = {
+  private def guardSizes(inputs: Seq[_], fns: Seq[AnyRef]): Unit = {
     import org.apache.spark.util.SizeEstimator
-    val fSize = SizeEstimator.estimate(f)
-    if (fSize > MaxFunctionBytes) throw FunctionTooBig(fSize, MaxFunctionBytes)
+    fns.foreach { f =>
+      val fSize = SizeEstimator.estimate(f)
+      if (fSize > MaxFunctionBytes) throw FunctionTooBig(fSize, MaxFunctionBytes)
+    }
     // full scan for modest lists (the reference checks every chunk it
     // packs); sample evenly beyond that to keep submission O(1)-ish
     val idxs =
@@ -180,8 +182,7 @@ object ParallelMap {
     * else min(defaultParallelism, #inputs) — always bounded by the
     * local-mode resource cap (cores/funcCpus, heap/funcRamGb; a no-op on
     * cluster managers, where applyResources attaches a real task
-    * profile). One formula, one place: the modes used to each carry a
-    * copy and had already drifted on whether the resource cap applied. */
+    * profile). */
   private def sliceCount(
       spark: SparkSession,
       nInputs: Int,
@@ -195,30 +196,39 @@ object ParallelMap {
     )
   }
 
-  /** The indexed, repartitioned input dataset every Dataset-backed mode
-    * maps over (index rides along for error/log attribution). */
-  private def indexedDataset[I: ClassTag](
+  /** The one input path every mode maps over: `(inputIndex, input)` pairs
+    * dealt round-robin on the driver — input i goes to slice i mod n, the
+    * reference's client-side hot-spot shuffle (_remote_parallel_map.py:
+    * 312-313) — with the call's task resource profile attached. The n
+    * dealt chunks are parallelized as n ELEMENTS and flattened: parallelize
+    * cuts a flat list into contiguous ranges, so this is what makes slice k
+    * hold exactly the inputs with i % n == k, in ascending index order. */
+  private def indexedInputs[I](
       spark: SparkSession,
       inputs: Seq[I],
       maxParallelism: Option[Int],
       resources: Resources
-  ): Dataset[(Long, I)] =
-    spark
-      .createDataset(inputs.zipWithIndex.map { case (x, i) => (i.toLong, x) })(kryoPair[I])
-      .repartition(sliceCount(spark, inputs.size, maxParallelism, resources))
+  ): RDD[(Long, I)] = {
+    val n = sliceCount(spark, inputs.size, maxParallelism, resources)
+    require(n >= 1, s"maxParallelism must be >= 1, got $n")
+    val xs = inputs.toIndexedSeq
+    val dealt = Seq.tabulate(n)(k => (k until xs.size by n).map(i => (i.toLong, xs(i))))
+    applyResources(spark, spark.sparkContext.parallelize(dealt, n).flatMap(_.iterator), resources)
+  }
 
-  /** Build the indexed, error-attributed dataset backing all modes. */
-  private def plan[I: ClassTag, O: ClassTag](
+  /** The fail-fast map (run, runDetached, stream): the first UDF error
+    * fails the job as UdfFailure(inputIndex, cause). */
+  private def plan[I, O: ClassTag](
       spark: SparkSession,
       inputs: Seq[I],
       f: I => O,
       maxParallelism: Option[Int],
-      resources: Resources = Resources()
-  ): Dataset[(Long, O)] =
-    indexedDataset(spark, inputs, maxParallelism, resources).map { case (idx, x) =>
+      resources: Resources
+  ): RDD[(Long, O)] =
+    indexedInputs(spark, inputs, maxParallelism, resources).map { case (idx, x) =>
       try (idx, f(x))
       catch { case e: Throwable => throw UdfFailure(idx, e) }
-    }(kryoPair[O])
+    }
 
   private def newGroup(): String = s"pmap-${java.util.UUID.randomUUID()}"
 
@@ -242,6 +252,72 @@ object ParallelMap {
     e
   }
 
+  /** Start of every mode's lifecycle: None for empty inputs (no cluster
+    * contact); otherwise the size guards, then a fresh `pmap-` group
+    * registered with JobTracker as RUNNING. */
+  private def begin(
+      spark: SparkSession,
+      inputs: Seq[_],
+      fns: Seq[AnyRef],
+      mode: String
+  ): Option[String] =
+    if (inputs.isEmpty) None
+    else {
+      guardSizes(inputs, fns)
+      val group = newGroup()
+      JobTracker.install(spark)
+      JobTracker.started(group, mode, inputs.size)
+      Some(group)
+    }
+
+  /** Failure attribution shared by every mode: unwrap Spark's wrapping to
+    * the attributed UDF error, record the failing input and the FAILED
+    * (or CANCELLED) transition; returns the error to rethrow. */
+  private def fail(group: String, e: Throwable): Throwable = {
+    val u = unwrap(e)
+    u match {
+      case uf: UdfFailure       => JobTracker.inputError(group, uf.inputIndex, uf.getMessage)
+      case nf: NestedUdfFailure => JobTracker.inputError(group, nf.outerIndex, nf.getMessage)
+      case _                    => ()
+    }
+    JobTracker.failed(group, u)
+    u
+  }
+
+  /** Run `body` (which collects the job and records its completion) under
+    * the group and the resource properties; a failure is attributed and
+    * rethrown. */
+  private def execute[R](spark: SparkSession, group: String, mode: String, resources: Resources)(
+      body: => R
+  ): R =
+    try withGroup(spark, group, s"ParallelMap $mode ($group)")(withResourceProps(spark, resources)(body))
+    catch { case e: Throwable => throw fail(group, e) }
+
+  /** The one job lifecycle of the collecting modes: begin, then execute
+    * `body(group)`; empty inputs return `empty`. */
+  private def lifecycle[R](
+      spark: SparkSession,
+      inputs: Seq[_],
+      fns: Seq[AnyRef],
+      mode: String,
+      resources: Resources,
+      empty: R
+  )(body: String => R): R =
+    begin(spark, inputs, fns, mode) match {
+      case None        => empty
+      case Some(group) => execute(spark, group, mode, resources)(body(group))
+    }
+
+  /** Collect the fail-fast map's results (run and runDetached). */
+  private def collectAll[I, O: ClassTag](
+      spark: SparkSession,
+      inputs: Seq[I],
+      maxParallelism: Option[Int],
+      resources: Resources,
+      f: I => O
+  ): Seq[O] =
+    plan(spark, inputs, f, maxParallelism, resources).map(_._2).collect().toSeq
+
   /** List mode: apply f to every input in parallel, return all results
     * (unordered). Throws UdfFailure(inputIndex, cause) on first UDF error.
     */
@@ -250,217 +326,36 @@ object ParallelMap {
       inputs: Seq[I],
       maxParallelism: Option[Int] = None,
       resources: Resources = Resources()
-  )(f: I => O): Seq[O] = {
-    if (inputs.isEmpty) return Nil // empty short-circuit, no cluster contact
-    guardSizes(inputs, f)
-    val group = newGroup()
-    JobTracker.install(spark)
-    JobTracker.started(group, "run", inputs.size)
-    try {
-      val out = withGroup(spark, group, s"ParallelMap run ($group)") {
-        withResourceProps(spark, resources) {
-          val ds = plan(spark, inputs, f, maxParallelism, resources)
-          if (resources.isDefault || spark.sparkContext.isLocal)
-            ds.collect().toSeq.map(_._2)
-          else applyResources(spark, ds.rdd, resources).collect().toSeq.map(_._2)
-        }
-      }
+  )(f: I => O): Seq[O] =
+    lifecycle(spark, inputs, Seq(f), "run", resources, Seq.empty[O]) { group =>
+      val out = collectAll(spark, inputs, maxParallelism, resources, f)
       JobTracker.completed(group)
       out
-    } catch {
-      case e: Throwable =>
-        val u = unwrap(e)
-        u match {
-          case uf: UdfFailure =>
-            JobTracker.inputError(group, uf.inputIndex, uf.getMessage)
-          case _ => ()
-        }
-        JobTracker.failed(group, u)
-        throw u
     }
-  }
-
-  /** Like run but keeps the input index with each result and never throws:
-    * per-input success/failure, the reference's (idx, is_error, payload)
-    * result triple (node_service job_endpoints.py:638).
-    */
-  def runAttributed[I: ClassTag, O: ClassTag](
-      spark: SparkSession,
-      inputs: Seq[I],
-      maxParallelism: Option[Int] = None,
-      resources: Resources = Resources()
-  )(f: I => O): Seq[(Long, Try[O])] = {
-    if (inputs.isEmpty) return Nil
-    guardSizes(inputs, f)
-    implicit val enc: Encoder[(Long, Either[String, O])] =
-      Encoders.kryo[(Long, Either[String, O])]
-    val group = newGroup()
-    JobTracker.install(spark)
-    JobTracker.started(group, "runAttributed", inputs.size)
-    try {
-      val raw = withGroup(spark, group, s"ParallelMap runAttributed ($group)") {
-        withResourceProps(spark, resources) {
-          indexedDataset(spark, inputs, maxParallelism, resources)
-            .map { case (idx, x) =>
-              val r: Either[String, O] =
-                try Right(f(x))
-                catch { case e: Throwable => Left(s"${e.getClass.getName}: ${e.getMessage}") }
-              (idx, r)
-            }
-            .collect()
-            .toSeq
-        }
-      }
-      raw.foreach {
-        case (i, Left(msg)) => JobTracker.inputError(group, i, msg)
-        case _              => ()
-      }
-      JobTracker.completed(group, nErrors = raw.count(_._2.isLeft))
-      raw.map {
-        case (i, Right(v))  => (i, Success(v))
-        case (i, Left(msg)) => (i, Failure(new RuntimeException(msg)))
-      }
-    } catch {
-      case e: Throwable =>
-        JobTracker.failed(group, unwrap(e)); throw unwrap(e)
-    }
-  }
-
-  /** Nested parallel map — the reference's "UDF calls remote_parallel_map
-    * recursively on-cluster" shape (test_nested_rpm.py), rebuilt as ONE
-    * distributed two-stage plan since Spark executors cannot submit jobs:
-    * `f` fans each outer input out into inner inputs, `g` maps every inner
-    * input, results return unordered. The repartition between the stages
-    * is the point: it redistributes the expanded inner inputs across the
-    * whole cluster exactly like the reference's inner job does — without
-    * it a skewed fan-out (one outer input producing 1M inner ones) would
-    * pin the entire inner stage to the partition that produced it.
-    * Errors carry two-level attribution (NestedUdfFailure: outer index,
-    * inner index, -1 while fanning out). Empty input and empty fan-outs
-    * short-circuit naturally.
-    */
-  def runNested[I: ClassTag, J: ClassTag, O: ClassTag](
-      spark: SparkSession,
-      inputs: Seq[I],
-      maxParallelism: Option[Int] = None,
-      resources: Resources = Resources()
-  )(f: I => Seq[J])(g: J => O): Seq[O] = {
-    if (inputs.isEmpty) return Nil // no cluster contact, as in run()
-    guardSizes(inputs, f)
-    guardSizes(Seq.empty[J], g)
-    val defaultPar = spark.sparkContext.defaultParallelism
-    val slices = sliceCount(spark, inputs.size, maxParallelism, resources)
-    val indexed = inputs.zipWithIndex.map { case (x, i) => (i.toLong, x) }
-    implicit val encJ: Encoder[(Long, Long, J)] = Encoders.kryo[(Long, Long, J)]
-    implicit val encO: Encoder[(Long, Long, O)] = Encoders.kryo[(Long, Long, O)]
-    val group = newGroup()
-    JobTracker.install(spark)
-    JobTracker.started(group, "runNested", inputs.size)
-    try {
-      val out = withGroup(spark, group, s"ParallelMap runNested ($group)") {
-        withResourceProps(spark, resources) {
-          spark
-            .createDataset(indexed)(kryoPair[I])
-            .repartition(slices)
-            .flatMap { case (oi, x) =>
-              val js =
-                try f(x)
-                catch { case e: Throwable => throw NestedUdfFailure(oi, -1L, e) }
-              js.iterator.zipWithIndex.map { case (j, ii) => (oi, ii.toLong, j) }
-            }
-            // spread the EXPANDED inner inputs; fan-out sizes are skewed by
-            // nature and the inner stage's parallelism must not inherit
-            // that — nor the OUTER input count (3 outer inputs fanning to
-            // 1M inner ones want the whole cluster). But the caller's
-            // explicit concurrency contract still binds: maxParallelism
-            // and the Resources core cap apply to the g() stage exactly
-            // as they do to the outer stage (a rate-limited or
-            // cores-per-call nested map must not run g() uncapped).
-            .repartition(math.min(
-              maxParallelism.getOrElse(defaultPar),
-              resourceSlicesCap(spark, resources)))
-            .map { case (oi, ii, j) =>
-              try (oi, ii, g(j))
-              catch { case e: Throwable => throw NestedUdfFailure(oi, ii, e) }
-            }
-            .collect()
-            .toSeq
-            .map(_._3)
-        }
-      }
-      JobTracker.completed(group)
-      out
-    } catch {
-      case e: Throwable =>
-        val u = unwrap(e)
-        u match {
-          case nf: NestedUdfFailure =>
-            JobTracker.inputError(group, nf.outerIndex, nf.getMessage)
-          case _ => ()
-        }
-        JobTracker.failed(group, u)
-        throw u
-    }
-  }
 
   /** Per-input log capture cap, mirroring the reference's 100 KB/doc limit
     * (node_service worker_client.py:32; SURVEY §1.1 "Log document"). */
   val MaxLogBytesPerInput: Int = 100 * 1000
 
-  /** Like runAttributed, but also captures what the UDF printed while
-    * processing each input — the reference's per-input log attribution
-    * (worker_client.py:154-338 parses `__burla_input_start__:idx` markers
-    * out of container logs; here the capture is direct). Scala
-    * `println`/`Console.out` writes are captured per task thread
-    * (Console.withOut is thread-local); raw `System.out` writes from
-    * native/Java code bypass the capture and land in executor logs.
-    * Output is truncated at MaxLogBytesPerInput per input.
-    */
-  def runWithLogs[I: ClassTag, O: ClassTag](
-      spark: SparkSession,
-      inputs: Seq[I],
-      maxParallelism: Option[Int] = None
-  )(f: I => O): Seq[(Long, Try[O], String)] = {
-    if (inputs.isEmpty) return Nil
-    guardSizes(inputs, f)
-    implicit val enc: Encoder[(Long, Either[String, O], String)] =
-      Encoders.kryo[(Long, Either[String, O], String)]
-    val cap = MaxLogBytesPerInput
-    val group = newGroup()
-    JobTracker.install(spark)
-    JobTracker.started(group, "runWithLogs", inputs.size)
-    try {
-      val raw = withGroup(spark, group, s"ParallelMap runWithLogs ($group)") {
-        indexedDataset(spark, inputs, maxParallelism, Resources())
-          .map { case (idx, x) =>
-            val buf = new java.io.ByteArrayOutputStream()
-            val r: Either[String, O] =
-              try Right(Console.withOut(buf)(f(x)))
-              catch { case e: Throwable => Left(s"${e.getClass.getName}: ${e.getMessage}") }
-            // cap is BYTES: truncate the raw buffer before decoding, so
-            // multi-byte output cannot exceed the documented 100 KB limit
-            // (a chopped trailing codepoint decodes as U+FFFD, which is fine)
-            val bytes = buf.toByteArray
-            val logs = new String(bytes, 0, math.min(bytes.length, cap), "UTF-8")
-            (idx, r, logs)
-          }
-          .collect()
-          .toSeq
-      }
-      raw.foreach {
-        case (i, Left(msg), _) => JobTracker.inputError(group, i, msg)
-        case _                 => ()
-      }
-      JobTracker.completed(group, nErrors = raw.count(_._2.isLeft))
-      raw.map {
-        case (i, Right(v), lg)  => (i, Success(v), lg)
-        case (i, Left(msg), lg) => (i, Failure(new RuntimeException(msg)), lg)
-      }
-    } catch {
-      case e: Throwable =>
-        JobTracker.failed(group, unwrap(e)); throw unwrap(e)
-    }
+  /** One input's outcome, never thrown: the UDF's result or its error
+    * message, plus — when `capture` is set — what it printed, truncated at
+    * MaxLogBytesPerInput BYTES (the raw buffer is cut before decoding, so
+    * multi-byte output cannot exceed the cap; a chopped trailing codepoint
+    * decodes as U+FFFD). Scala `println`/`Console.out` writes are captured
+    * per task thread (Console.withOut is thread-local); raw `System.out`
+    * writes from native/Java code bypass the capture and land in executor
+    * logs. */
+  private def outcome[I, O](f: I => O, x: I, capture: Boolean): (Either[String, O], String) = {
+    val buf = new java.io.ByteArrayOutputStream()
+    val r: Either[String, O] =
+      try Right(if (capture) Console.withOut(buf)(f(x)) else f(x))
+      catch { case e: Throwable => Left(s"${e.getClass.getName}: ${e.getMessage}") }
+    val bytes = buf.toByteArray
+    (r, new String(bytes, 0, math.min(bytes.length, MaxLogBytesPerInput), "UTF-8"))
   }
+
+  private def toTry[O](r: Either[String, O]): Try[O] =
+    r.fold(msg => Failure(new RuntimeException(msg)), Success(_))
 
   /** Newest entries a task's relay accumulator retains (and therefore the
     * most a single heartbeat ships). The relay channel only serves
@@ -497,6 +392,142 @@ object ParallelMap {
     override def value: List[(Long, String)] = entries
   }
 
+  /** Driver end of the live relay: registers `acc`, diffs the partial
+    * values executor heartbeats carry (SparkListenerExecutorMetricsUpdate)
+    * and fires `onLog` exactly once per input. */
+  private final class LiveRelay(spark: SparkSession, onLog: (Long, String) => Unit)
+      extends org.apache.spark.scheduler.SparkListener {
+    val acc = new LogRelayAcc
+    spark.sparkContext.register(acc, "graft.pmap.liveLogs")
+    private val fired = java.util.concurrent.ConcurrentHashMap.newKeySet[Long]()
+    def fire(entries: Seq[(Long, String)]): Unit =
+      entries.foreach { case (idx, lg) => if (fired.add(idx)) onLog(idx, lg) }
+    override def onExecutorMetricsUpdate(
+        u: org.apache.spark.scheduler.SparkListenerExecutorMetricsUpdate
+    ): Unit =
+      u.accumUpdates.foreach { case (_, _, _, infos) =>
+        infos.foreach { info =>
+          if (info.id == acc.id) info.update.foreach {
+            case v: List[_] => fire(v.asInstanceOf[List[(Long, String)]])
+            case _          => ()
+          }
+        }
+      }
+  }
+
+  /** The one implementation of the per-input-outcome modes (runAttributed,
+    * runWithLogs, runWithLiveLogs): every input settles to an attributed
+    * Try, each error is recorded on the job, nothing is thrown per input.
+    * With `onLog`, each input's captured logs are relayed while the job
+    * runs (LiveRelay), then a completeness sweep over the collected
+    * results fires whatever no heartbeat delivered. */
+  private def attributed[I, O: ClassTag](
+      spark: SparkSession,
+      inputs: Seq[I],
+      maxParallelism: Option[Int],
+      resources: Resources,
+      mode: String,
+      capture: Boolean,
+      onLog: Option[(Long, String) => Unit]
+  )(f: I => O): Seq[(Long, Try[O], String)] =
+    lifecycle(spark, inputs, Seq(f), mode, resources, Seq.empty[(Long, Try[O], String)]) { group =>
+      val relay = onLog.map(new LiveRelay(spark, _))
+      val acc = relay.map(_.acc)
+      relay.foreach(spark.sparkContext.addSparkListener)
+      try {
+        val raw = indexedInputs(spark, inputs, maxParallelism, resources)
+          .map { case (idx, x) =>
+            val (r, logs) = outcome(f, x, capture)
+            acc.foreach(_.add((idx, logs))) // visible to the next heartbeat mid-task
+            (idx, r, logs)
+          }
+          .collect()
+          .toSeq
+        relay.foreach(_.fire(raw.map { case (i, _, lg) => (i, lg) }))
+        var nErrors = 0L
+        val out = raw.map { case (i, r, lg) =>
+          r.left.foreach { msg => JobTracker.inputError(group, i, msg); nErrors += 1 }
+          (i, toTry(r), lg)
+        }
+        JobTracker.completed(group, nErrors)
+        out
+      } finally relay.foreach(spark.sparkContext.removeSparkListener)
+    }
+
+  /** Like run but keeps the input index with each result and never throws:
+    * per-input success/failure, the reference's (idx, is_error, payload)
+    * result triple (node_service job_endpoints.py:638).
+    */
+  def runAttributed[I: ClassTag, O: ClassTag](
+      spark: SparkSession,
+      inputs: Seq[I],
+      maxParallelism: Option[Int] = None,
+      resources: Resources = Resources()
+  )(f: I => O): Seq[(Long, Try[O])] =
+    attributed(spark, inputs, maxParallelism, resources, "runAttributed", capture = false, None)(f)
+      .map { case (i, r, _) => (i, r) }
+
+  /** Nested parallel map — the reference's "UDF calls remote_parallel_map
+    * recursively on-cluster" shape (test_nested_rpm.py), rebuilt as ONE
+    * distributed two-stage plan since Spark executors cannot submit jobs:
+    * `f` fans each outer input out into inner inputs, `g` maps every inner
+    * input, results return unordered. The repartition between the stages
+    * is the point: it redistributes the expanded inner inputs across the
+    * whole cluster exactly like the reference's inner job does — without
+    * it a skewed fan-out (one outer input producing 1M inner ones) would
+    * pin the entire inner stage to the partition that produced it.
+    * Errors carry two-level attribution (NestedUdfFailure: outer index,
+    * inner index, -1 while fanning out). Empty input and empty fan-outs
+    * short-circuit naturally.
+    */
+  def runNested[I: ClassTag, J: ClassTag, O: ClassTag](
+      spark: SparkSession,
+      inputs: Seq[I],
+      maxParallelism: Option[Int] = None,
+      resources: Resources = Resources()
+  )(f: I => Seq[J])(g: J => O): Seq[O] =
+    lifecycle(spark, inputs, Seq(f, g), "runNested", resources, Seq.empty[O]) { group =>
+      val inner = indexedInputs(spark, inputs, maxParallelism, resources)
+        .flatMap { case (oi, x) =>
+          val js =
+            try f(x)
+            catch { case e: Throwable => throw NestedUdfFailure(oi, -1L, e) }
+          js.iterator.zipWithIndex.map { case (j, ii) => (oi, ii.toLong, j) }
+        }
+        // spread the EXPANDED inner inputs; fan-out sizes are skewed by
+        // nature and the inner stage's parallelism must not inherit
+        // that — nor the OUTER input count (3 outer inputs fanning to
+        // 1M inner ones want the whole cluster). But the caller's
+        // explicit concurrency contract still binds: maxParallelism
+        // and the Resources core cap apply to the g() stage exactly
+        // as they do to the outer stage (a rate-limited or
+        // cores-per-call nested map must not run g() uncapped).
+        .repartition(math.min(
+          maxParallelism.getOrElse(spark.sparkContext.defaultParallelism),
+          resourceSlicesCap(spark, resources)))
+        .map { case (oi, ii, j) =>
+          try g(j)
+          catch { case e: Throwable => throw NestedUdfFailure(oi, ii, e) }
+        }
+      val out = applyResources(spark, inner, resources).collect().toSeq
+      JobTracker.completed(group)
+      out
+    }
+
+  /** Like runAttributed, but also captures what the UDF printed while
+    * processing each input — the reference's per-input log attribution
+    * (worker_client.py:154-338 parses `__burla_input_start__:idx` markers
+    * out of container logs; here the capture is direct). runWithLiveLogs
+    * without the relay; output is truncated at MaxLogBytesPerInput per
+    * input.
+    */
+  def runWithLogs[I: ClassTag, O: ClassTag](
+      spark: SparkSession,
+      inputs: Seq[I],
+      maxParallelism: Option[Int] = None
+  )(f: I => O): Seq[(Long, Try[O], String)] =
+    attributed(spark, inputs, maxParallelism, Resources(), "runWithLogs", capture = true, None)(f)
+
   /** Like runWithLogs, but each input's captured stdout is relayed to
     * `onLog` WHILE the job is still running — per-INPUT granularity, not
     * per-partition: a fast input's log is observable on the driver while a
@@ -517,78 +548,16 @@ object ParallelMap {
     * timing: a final sweep over the collected results fires any entry a
     * heartbeat did not beat to the finish line.
     *
-    * Inputs are chunked CONTIGUOUSLY (parallelize slices, the reference's
-    * proportional chunking) rather than round-robin shuffled, so
-    * within-partition execution order is input order — deterministic log
-    * interleaving per partition. */
+    * Inputs are dealt round-robin like every mode; a partition runs its
+    * inputs in ascending index order, so log interleaving per partition is
+    * deterministic. */
   def runWithLiveLogs[I: ClassTag, O: ClassTag](
       spark: SparkSession,
       inputs: Seq[I],
       maxParallelism: Option[Int] = None
-  )(f: I => O)(onLog: (Long, String) => Unit): Seq[(Long, Try[O], String)] = {
-    if (inputs.isEmpty) return Nil
-    guardSizes(inputs, f)
-    val indexed = inputs.zipWithIndex.map { case (x, i) => (i.toLong, x) }
-    // RDD path (accumulator relay needs parallelize) — same slice formula
-    // as every Dataset-backed mode
-    val slices = sliceCount(spark, inputs.size, maxParallelism, Resources())
-    val cap = MaxLogBytesPerInput
-    val sc = spark.sparkContext
-    val acc = new LogRelayAcc
-    sc.register(acc, "graft.pmap.liveLogs")
-    val fired = java.util.concurrent.ConcurrentHashMap.newKeySet[Long]()
-    def fire(entries: Seq[(Long, String)]): Unit =
-      entries.foreach { case (idx, lg) => if (fired.add(idx)) onLog(idx, lg) }
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onExecutorMetricsUpdate(
-          u: org.apache.spark.scheduler.SparkListenerExecutorMetricsUpdate
-      ): Unit =
-        u.accumUpdates.foreach { case (_, _, _, infos) =>
-          infos.foreach { info =>
-            if (info.id == acc.id) info.update.foreach {
-              case v: List[_] => fire(v.asInstanceOf[List[(Long, String)]])
-              case _          => ()
-            }
-          }
-        }
-    }
-    val group = newGroup()
-    JobTracker.install(spark)
-    JobTracker.started(group, "runWithLiveLogs", inputs.size)
-    sc.addSparkListener(listener)
-    try {
-      val raw = withGroup(spark, group, s"ParallelMap runWithLiveLogs ($group)") {
-        sc.parallelize(indexed, slices)
-          .map { case (idx, x) =>
-            val buf = new java.io.ByteArrayOutputStream()
-            val r: Either[String, O] =
-              try Right(Console.withOut(buf)(f(x)))
-              catch { case e: Throwable => Left(s"${e.getClass.getName}: ${e.getMessage}") }
-            val bytes = buf.toByteArray
-            val logs = new String(bytes, 0, math.min(bytes.length, cap), "UTF-8")
-            acc.add((idx, logs)) // visible to the next heartbeat mid-task
-            (idx, r, logs)
-          }
-          .collect()
-          .toSeq
-      }
-      // completeness sweep: anything no heartbeat delivered fires here
-      // (post-job, but exactly-once is preserved via `fired`)
-      fire(raw.map { case (i, _, lg) => (i, lg) })
-      raw.foreach {
-        case (i, Left(msg), _) => JobTracker.inputError(group, i, msg)
-        case _                 => ()
-      }
-      JobTracker.completed(group, nErrors = raw.count(_._2.isLeft))
-      raw.map {
-        case (i, Right(v), lg)  => (i, Success(v), lg)
-        case (i, Left(msg), lg) => (i, Failure(new RuntimeException(msg)), lg)
-      }
-    } catch {
-      case e: Throwable =>
-        JobTracker.failed(group, unwrap(e)); throw unwrap(e)
-    } finally sc.removeSparkListener(listener)
-  }
+  )(f: I => O)(onLog: (Long, String) => Unit): Seq[(Long, Try[O], String)] =
+    attributed(spark, inputs, maxParallelism, Resources(), "runWithLiveLogs", capture = true,
+      Some(onLog))(f)
 
   /** Shared single-thread callback executor for stream() completions —
     * callbacks only move a finished partition's results into the hand-off
@@ -606,13 +575,12 @@ object ParallelMap {
     * 703-707). A straggler partition does not block results from fast
     * partitions (ParallelMapSpec pins this).
     *
-    * Each partition is submitted as its own single-task Spark job (the
-    * shuffle that spreads the inputs is computed once by the first job and
-    * reused). `window` bounds how many partitions may be in flight or
-    * buffered ahead of the consumer — the analog of the reference's
-    * result-queue backpressure (worker_client.py:28,792-793): a slow
-    * consumer stops NEW partition jobs from being submitted once `window`
-    * results are pending. Default 0 = number of partitions (full
+    * Each partition is submitted as its own single-task Spark job over its
+    * slice of the dealt inputs. `window` bounds how many partitions may be
+    * in flight or buffered ahead of the consumer — the analog of the
+    * reference's result-queue backpressure (worker_client.py:28,792-793): a
+    * slow consumer stops NEW partition jobs from being submitted once
+    * `window` results are pending. Default 0 = number of partitions (full
     * parallelism; driver may buffer the whole result set if the consumer
     * never drains — size maxParallelism/window to taste).
     *
@@ -634,7 +602,7 @@ object ParallelMap {
 
   /** The as-completed machinery, index-preserving (backs both stream
     * flavors). */
-  private def streamIndexed[I: ClassTag, O: ClassTag](
+  private def streamIndexed[I, O: ClassTag](
       spark: SparkSession,
       inputs: Seq[I],
       maxParallelism: Option[Int],
@@ -642,16 +610,11 @@ object ParallelMap {
       window: Int,
       mode: String
   )(f: I => O): Iterator[(Long, O)] = {
-    if (inputs.isEmpty) return Iterator.empty
-    guardSizes(inputs, f)
-    val group = newGroup()
-    JobTracker.install(spark)
-    JobTracker.started(group, mode, inputs.size)
-    val rdd = applyResources(
-      spark,
-      plan(spark, inputs, f, maxParallelism, resources).rdd,
-      resources
-    )
+    val group = begin(spark, inputs, Seq(f), mode) match {
+      case None    => return Iterator.empty
+      case Some(g) => g
+    }
+    val rdd = plan(spark, inputs, f, maxParallelism, resources)
     val parts = rdd.getNumPartitions
     val w = if (window > 0) math.min(window, parts) else parts
     val sem = new java.util.concurrent.Semaphore(w)
@@ -660,39 +623,39 @@ object ParallelMap {
     val failedFlag = new java.util.concurrent.atomic.AtomicBoolean(false)
     val sc = spark.sparkContext
     val submitter = new Thread(
-      () => {
+      () =>
         // job group + resource props are thread-local and captured at
         // submit time — set them on THIS thread
-        sc.setJobGroup(group, s"ParallelMap $mode ($group)", interruptOnCancel = true)
-        try withResourceProps(spark, resources) {
-          var p = 0
-          while (p < parts && !failedFlag.get()) {
-            sem.acquire()
-            if (!failedFlag.get()) {
-              val holder =
-                new java.util.concurrent.atomic.AtomicReference[Array[(Long, O)]]()
-              try {
-                val fa = sc.submitJob[(Long, O), Array[(Long, O)], Unit](
-                  rdd,
-                  it => it.toArray,
-                  Seq(p),
-                  (_, a) => holder.set(a), // scheduler thread: store only
-                  ()
-                )
-                fa.onComplete {
-                  case Success(_) => queue.put(Right(holder.get()))
-                  case Failure(e) =>
+        withGroup(spark, group, s"ParallelMap $mode ($group)") {
+          withResourceProps(spark, resources) {
+            var p = 0
+            while (p < parts && !failedFlag.get()) {
+              sem.acquire()
+              if (!failedFlag.get()) {
+                val holder =
+                  new java.util.concurrent.atomic.AtomicReference[Array[(Long, O)]]()
+                try {
+                  val fa = sc.submitJob[(Long, O), Array[(Long, O)], Unit](
+                    rdd,
+                    it => it.toArray,
+                    Seq(p),
+                    (_, a) => holder.set(a), // scheduler thread: store only
+                    ()
+                  )
+                  fa.onComplete {
+                    case Success(_) => queue.put(Right(holder.get()))
+                    case Failure(e) =>
+                      failedFlag.set(true); queue.put(Left(e))
+                  }(streamCallbackEc)
+                } catch {
+                  case e: Throwable =>
                     failedFlag.set(true); queue.put(Left(e))
-                }(streamCallbackEc)
-              } catch {
-                case e: Throwable =>
-                  failedFlag.set(true); queue.put(Left(e))
+                }
               }
+              p += 1
             }
-            p += 1
           }
-        } finally sc.clearJobGroup()
-      },
+        },
       s"$group-submitter"
     )
     submitter.setDaemon(true)
@@ -711,13 +674,7 @@ object ParallelMap {
               if (taken == parts) JobTracker.completed(group)
             case Left(e) =>
               taken = parts // terminal: no further results will be yielded
-              val u = unwrap(e)
-              u match {
-                case uf: UdfFailure =>
-                  JobTracker.inputError(group, uf.inputIndex, uf.getMessage)
-                case _ => ()
-              }
-              JobTracker.failed(group, u)
+              val u = fail(group, e)
               // stop the submitter: flag first, then release enough
               // permits to unpark it from sem.acquire (its loop re-checks
               // the flag and exits without submitting)
@@ -751,30 +708,10 @@ object ParallelMap {
       maxParallelism: Option[Int] = None,
       resources: Resources = Resources(),
       window: Int = 0
-  )(f: I => O): Iterator[(Long, Try[O], String)] = {
-    val cap = MaxLogBytesPerInput
-    streamIndexed[I, (Either[String, O], String)](
-      spark, inputs, maxParallelism, resources, window, "streamWithLogs"
-    ) { x =>
-      // capture stdout and classify the outcome per input; the input index
-      // rides on the streamIndexed envelope
-      val buf = new java.io.ByteArrayOutputStream()
-      val r: Either[String, O] =
-        try Right(Console.withOut(buf)(f(x)))
-        catch { case e: Throwable => Left(s"${e.getClass.getName}: ${e.getMessage}") }
-      val bytes = buf.toByteArray
-      (r, new String(bytes, 0, math.min(bytes.length, cap), "UTF-8"))
-    }.map {
-      case (idx, (Right(v), lg))  => (idx, Success(v), lg)
-      case (idx, (Left(msg), lg)) => (idx, Failure(new RuntimeException(msg)), lg)
-    }
-  }
-
-  /** Dataset-side variant for schema-ful pipelines: same wrapper semantics,
-    * but distributed end-to-end (no driver materialization of inputs).
-    */
-  def mapDataset[I, O: Encoder](ds: Dataset[I])(f: I => O): Dataset[O] =
-    ds.map(f)
+  )(f: I => O): Iterator[(Long, Try[O], String)] =
+    streamIndexed(spark, inputs, maxParallelism, resources, window, "streamWithLogs") {
+      (x: I) => outcome(f, x, capture = true)
+    }.map { case (idx, (r, lg)) => (idx, toTry(r), lg) }
 
   /** Handle on a detached job: the reference's `detach=True` (job keeps
     * running independently of the submitting code path,
@@ -819,7 +756,9 @@ object ParallelMap {
   }
 
   /** Detached mode: submit and return immediately; the job runs on its own
-    * thread regardless of what the CALLING CODE does next.
+    * thread regardless of what the CALLING CODE does next. The size guards
+    * and the RUNNING record happen on the submitting thread (fail fast, as
+    * the reference does); the rest of the lifecycle runs on the job's.
     *
     * Honest scope vs the reference: Burla's detached jobs live on the
     * cluster and survive the client PROCESS exiting
@@ -838,37 +777,29 @@ object ParallelMap {
       maxParallelism: Option[Int] = None,
       resources: Resources = Resources()
   )(f: I => O): PMapJob[O] = {
-    val group = newGroup()
     val fut = new java.util.concurrent.CompletableFuture[Seq[O]]()
     val cancelled = new java.util.concurrent.atomic.AtomicBoolean(false)
-    if (inputs.isEmpty) { fut.complete(Nil); return new PMapJob(spark, group, fut, cancelled) }
-    guardSizes(inputs, f) // fail fast on the submitting thread, as the reference does
-    JobTracker.install(spark)
-    JobTracker.started(group, "detached", inputs.size)
-    val t = new Thread(() => {
-      try {
-        // job group is thread-local; tag every job this map spawns
-        spark.sparkContext.setJobGroup(group, s"ParallelMap detached ($group)",
-          interruptOnCancel = true)
-        if (!cancelled.get()) {
-          val r = withResourceProps(spark, resources) {
-            val ds = plan(spark, inputs, f, maxParallelism, resources)
-            if (resources.isDefault || spark.sparkContext.isLocal)
-              ds.collect().toSeq.map(_._2)
-            else applyResources(spark, ds.rdd, resources).collect().toSeq.map(_._2)
-          }
-          // a cancel that raced the submission wins: results are discarded
-          // (completeExceptionally in cancel() seals the future first)
-          if (fut.complete(r)) JobTracker.completed(group)
-        }
-      } catch {
-        case e: Throwable =>
-          val u = unwrap(e)
-          if (fut.completeExceptionally(u)) JobTracker.failed(group, u)
-      } finally spark.sparkContext.clearJobGroup()
-    }, group)
-    t.setDaemon(true)
-    t.start()
-    new PMapJob(spark, group, fut, cancelled)
+    begin(spark, inputs, Seq(f), "detached") match {
+      case None =>
+        fut.complete(Nil)
+        new PMapJob(spark, newGroup(), fut, cancelled)
+      case Some(group) =>
+        val t = new Thread(() =>
+          try {
+            if (!cancelled.get()) {
+              val r = execute(spark, group, "detached", resources) {
+                collectAll(spark, inputs, maxParallelism, resources, f)
+              }
+              // a cancel that raced the submission wins: results are
+              // discarded (completeExceptionally in cancel() seals the
+              // future first)
+              if (fut.complete(r)) JobTracker.completed(group)
+            }
+          } catch { case e: Throwable => fut.completeExceptionally(e) },
+          group)
+        t.setDaemon(true)
+        t.start()
+        new PMapJob(spark, group, fut, cancelled)
+    }
   }
 }

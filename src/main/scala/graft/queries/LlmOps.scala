@@ -4531,36 +4531,15 @@ object LlmOps {
       counts: DataFrame,
       keys: Seq[String] = Seq("doc_id")
   ): DataFrame = {
-    // The count table is vocabulary + pair-vocabulary sized (metadata at
-    // any corpus scale) but feeds FIVE reads below (ug ×3, bgc ×2) — an
-    // uncached in-plan fit recomputed the whole count aggregation once
-    // per read (r16 profile of t27: eleven serial 1-task re-reads of the
-    // token cache, ~0.5–0.9 s each, most of them duplicate LM fits).
-    // localCheckpoint materializes the counts ONCE per execution at their
-    // AQE-coalesced width; batch callers pay it inside their own timed
-    // run, and the streaming scorer checkpoints its loaded artifact once
-    // at stream construction. (A .cache() would pin the raw 32-way
-    // shuffle width instead — the q51 lesson — and die with the session;
-    // the checkpoint keeps the executed partitioning.)
-    val cnts = counts.localCheckpoint(true)
-    val ug = cnts.filter(col("prev").isNull).select(col("tok"), col("cnt"))
-    val bgc = cnts.filter(col("prev").isNotNull)
+    val ug = counts.filter(col("prev").isNull).select(col("tok"), col("cnt"))
+    val bgc = counts.filter(col("prev").isNotNull)
       .select(col("prev"), col("tok"), col("cnt").as("cb"))
-    // The corpus token total is ONE exact long — computed on the driver
-    // from the checkpointed counts (a vocabulary-sized aggregate) and
-    // re-entering the plan as a literal, instead of a 1-row frame
-    // crossJoin(broadcast)-ed into both scoring dims (two broadcast
-    // stages for one number). Same value, same correctly-rounded double
-    // divisions downstream. Null only when the vocabulary is empty, in
-    // which case lppu/lppb are empty too and the literal is never
-    // evaluated against a row.
-    val tt: Long = Option(
-      ug.agg(sum(col("cnt")).as("tt")).head().get(0)
-    ).map(_.asInstanceOf[Long]).getOrElse(0L)
+    val g = ug.agg(sum(col("cnt")).as("tt"))
     val lppu = ug
+      .crossJoin(broadcast(g))
       .select(
         col("tok"),
-        (-log(col("cnt").cast("double") / lit(tt).cast("double")))
+        (-log(col("cnt").cast("double") / col("tt").cast("double")))
           .cast(DecimalType(28, 9))
           .as("nlp")
       )
@@ -4568,12 +4547,13 @@ object LlmOps {
     val lppb = bgc
       .join(cp, "prev")
       .join(ug, "tok")
+      .crossJoin(broadcast(g))
       .select(
         col("prev"),
         col("tok"),
         (-log(
           lit(0.75) * (col("cb").cast("double") / col("cp").cast("double")) +
-            lit(0.25) * (col("cnt").cast("double") / lit(tt).cast("double"))
+            lit(0.25) * (col("cnt").cast("double") / col("tt").cast("double"))
         )).cast(DecimalType(28, 9)).as("nlp")
       )
     val keyCols = keys.map(col)

@@ -353,6 +353,87 @@ class ParallelMapSpec extends AnyFunSuite {
     assert(out.sorted == (0 until 40))
   }
 
+  test("every mode: one map stage, no shuffle, input i dealt to partition i % n") {
+    // The reference shuffles (idx, input) pairs on the client to spread
+    // hot spots (_remote_parallel_map.py:312-313); here that is a
+    // round-robin deal on the driver, so the map is ONE stage with no
+    // Spark shuffle and slice k holds exactly {i : i % n == k}.
+    import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
+    import org.apache.spark.TaskContext
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
+    import scala.jdk.CollectionConverters._
+    val jobStages = new ConcurrentHashMap[String, ConcurrentLinkedQueue[Int]]() // group -> stages per job
+    val stageGroup = new ConcurrentHashMap[Int, String]()
+    val stagesDone = new ConcurrentHashMap[String, Integer]()
+    val shuffleWrite = new ConcurrentHashMap[String, java.lang.Long]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .filter(_.startsWith("pmap-")).foreach { g =>
+            jobStages.computeIfAbsent(g, _ => new ConcurrentLinkedQueue[Int]()).add(e.stageInfos.size)
+            e.stageIds.foreach(stageGroup.put(_, g))
+          }
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        Option(stageGroup.get(e.stageInfo.stageId)).foreach { g =>
+          val written = e.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten
+          shuffleWrite.merge(g, written, (a, b) => a + b)
+          stagesDone.merge(g, 1, (a, b) => a + b)
+        }
+    }
+    val in = 0 until 12
+    val mp = Some(4)
+    val probe: Int => (Int, Int) = x => (x, TaskContext.getPartitionId())
+    // (mode, stages per job, call returning each input with its partition)
+    val modes: Seq[(String, Int, () => Seq[(Int, Int)])] = Seq(
+      ("run", 1, () => ParallelMap.run(spark, in, mp)(probe)),
+      ("runAttributed", 1, () => ParallelMap.runAttributed(spark, in, mp)(probe).map(_._2.get)),
+      ("runWithLogs", 1, () => ParallelMap.runWithLogs(spark, in, mp)(probe).map(_._2.get)),
+      ("runWithLiveLogs", 1,
+        () => ParallelMap.runWithLiveLogs(spark, in, mp)(probe)((_, _) => ()).map(_._2.get)),
+      ("runDetached", 1, () => ParallelMap.runDetached(spark, in, mp)(probe).result()),
+      ("stream", 1, () => ParallelMap.stream(spark, in, mp)(probe).toList),
+      ("streamWithLogs", 1,
+        () => ParallelMap.streamWithLogs(spark, in, mp)(probe).map(_._2.get).toList),
+      // probed in the OUTER (fan-out) stage; the inner rebalance is
+      // runNested's one deliberate shuffle, so its job has two stages
+      ("runNested", 2,
+        () => ParallelMap.runNested(spark, in, mp)(x => Seq(probe(x)))(identity[(Int, Int)]))
+    )
+    val want = (0 until 4).map(k => k -> in.filter(_ % 4 == k).toSet).toMap
+    spark.sparkContext.addSparkListener(listener)
+    try modes.foreach { case (mode, stages, call) =>
+      val before = jobStages.keySet.asScala.toSet
+      val out = call()
+      assert(out.map(_._1).sorted == in, s"$mode lost or duplicated inputs")
+      assert(out.groupBy(_._2).map { case (k, v) => k -> v.map(_._1).toSet } == want,
+        s"$mode: partition contents ${out.groupBy(_._2)}")
+      // listener events are async — wait until this call's stages are done
+      def group = (jobStages.keySet.asScala.toSet -- before).toSeq
+      def settled = group.size == 1 && {
+        val g = group.head
+        stagesDone.getOrDefault(g, 0) >= jobStages.get(g).asScala.sum
+      }
+      val deadline = System.currentTimeMillis() + 10000
+      while (!settled && System.currentTimeMillis() < deadline) Thread.sleep(20)
+      assert(group.size == 1, s"$mode ran under ${group.size} pmap groups")
+      val g = group.head
+      val perJob = jobStages.get(g).asScala.toSeq
+      assert(perJob.nonEmpty && perJob.forall(_ == stages), s"$mode: stages per job $perJob")
+      if (stages == 1)
+        assert(shuffleWrite.getOrDefault(g, 0L) == 0L, s"$mode wrote shuffle bytes")
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("a non-Serializable input fails loudly on the driver instead of hanging") {
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration._
+    // inputs must be java.io.Serializable (the Spark RDD contract)
+    val call = Future(ParallelMap.run(spark, Seq(new NotSerializableInput(1)))(_.v))(
+      ExecutionContext.global)
+    val e = intercept[org.apache.spark.SparkException](Await.result(call, 60.seconds))
+    assert(e.getMessage.contains("NotSerializableException"), e.getMessage)
+  }
+
   test("nested map: fan-out then inner map in one plan (test_nested_rpm.py analog)") {
     // input i fans out to i copies of i; inner stage multiplies by 10
     val out = ParallelMap.runNested(spark, Seq(1, 2, 3))(i => Seq.fill(i)(i))(_ * 10)
@@ -414,3 +495,6 @@ object LiveRelayProbe {
   @volatile var stragglerDone = false
   @volatile var liveBeforeStraggler = false
 }
+
+/** An input type that is NOT java.io.Serializable. */
+final class NotSerializableInput(val v: Int)
