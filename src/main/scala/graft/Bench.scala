@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 
 /** Per-round benchmark: runs every registered query against
@@ -72,6 +73,12 @@ import org.apache.spark.sql.SparkSession
   * stays in bench_full.json, which also keeps the full-precision
   * (3-decimal) warm/cold per full query name; BASELINE.md carries the
   * committed per-query reference table.
+  *
+  * CODEGEN: each bench_full.json row also carries the whole-stage-codegen
+  * classes its cold and its warm leg compiled ("compiles_cold" /
+  * "compiles_warm", Spark's CodegenMetrics compile count). A warm leg
+  * that compiles missed the generated-class cache — an evicted class or
+  * a plan that differs between runs.
   */
 object Bench {
   /** Locale-fixed decimal rendering for the JSON outputs: the f""
@@ -293,7 +300,11 @@ object Bench {
       // leg's cpu, so when the cold leg was the minimum a borderline
       // flag was adjudicated on mismatched signals (ADVICE r12)
       cpuBest: Double,
-      load: Double
+      load: Double,
+      // whole-stage-codegen classes each leg compiled: a warm leg that
+      // compiles means the generated-class cache missed
+      compilesCold: Long = 0L,
+      compilesWarm: Long = 0L
   )
 
   private[graft] case class Adjudicated(
@@ -379,12 +390,17 @@ object Bench {
       else SparkEntry.queries.toSeq.filter { case (n, _) => args.exists(n.contains) }
     def measure(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): R = {
       def exec(): Unit = fn(spark, sfDir).queryExecution.toRdd.count()
+      def compiles(): Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
       val cpuC0 = cpuS()
+      val cc0 = compiles()
       val (cold, okC) = time(exec())
+      val compilesCold = compiles() - cc0
       val cpuCold = cpuDiff(cpuC0, cpuS())
       val stCold = Hygiene.storageBytes(spark)
       val cpu0 = cpuS()
+      val cw0 = compiles()
       val (warm, okW) = time(exec())
+      val compilesWarm = compiles() - cw0
       val cpuWarm = cpuDiff(cpu0, cpuS())
       val stWarm = Hygiene.storageBytes(spark)
       Hygiene.release(spark)
@@ -393,9 +409,11 @@ object Bench {
         val cpuBest = if (cold <= warm) cpuCold else cpuWarm
         R(name, best, cold, ok = true, stCold, stWarm,
           refs.get(name).exists(best > 2 * _.warm),
-          refs.get(name).exists(cold > 2 * _.cold), cpuWarm, cpuCold, cpuBest, load1())
+          refs.get(name).exists(cold > 2 * _.cold), cpuWarm, cpuCold, cpuBest, load1(),
+          compilesCold, compilesWarm)
       } else R(name, -1.0, -1.0, ok = false, stCold, stWarm,
-        drift = false, coldDrift = false, cpuWarm, cpuCold, cpuBest = -1.0, load1())
+        drift = false, coldDrift = false, cpuWarm, cpuCold, cpuBest = -1.0, load1(),
+        compilesCold, compilesWarm)
     }
     val firstPass = selected.sortBy(_._1).map { case (name, fn) => measure(name, fn) }
     // End-of-suite recheck: every first-pass drift flag — WARM OR COLD —
@@ -484,7 +502,7 @@ object Bench {
               s""", "first_pass_warm": ${jnum(fp.warm)}, "recheck_warm": ${jnum(r2.warm)}, "first_pass_cold": ${jnum(fp.cold)}, "recheck_cold": ${jnum(r2.cold)}, "recheck_cpu_warm_s": ${jnum(r2.cpuWarm)}, "recheck_cpu_cold_s": ${jnum(r2.cpuCold)}, "recheck_load1": ${jnum(r2.load)}"""
             }
             .getOrElse("")
-          s"""  "${r.name}": {"warm": ${jnum(r.warm)}, "cold": ${jnum(r.cold)}, "ok": ${r.ok}, "storage_cold_b": ${r.stCold}, "storage_warm_b": ${r.stWarm}, "cpu_warm_s": ${jnum(r.cpuWarm)}, "cpu_cold_s": ${jnum(r.cpuCold)}, "load1": ${jnum(r.load)}, "drift": ${r.drift}, "cold_drift": ${r.coldDrift}, "drift_needs_rerun": ${a.warmNeedsRerun}, "cold_drift_needs_rerun": ${a.coldNeedsRerun}$refPart$recheckPart}"""
+          s"""  "${r.name}": {"warm": ${jnum(r.warm)}, "cold": ${jnum(r.cold)}, "ok": ${r.ok}, "storage_cold_b": ${r.stCold}, "storage_warm_b": ${r.stWarm}, "cpu_warm_s": ${jnum(r.cpuWarm)}, "cpu_cold_s": ${jnum(r.cpuCold)}, "load1": ${jnum(r.load)}, "compiles_cold": ${r.compilesCold}, "compiles_warm": ${r.compilesWarm}, "drift": ${r.drift}, "cold_drift": ${r.coldDrift}, "drift_needs_rerun": ${a.warmNeedsRerun}, "cold_drift_needs_rerun": ${a.coldNeedsRerun}$refPart$recheckPart}"""
         }
         .mkString("{\n", ",\n", "\n}")
       java.nio.file.Files.write(

@@ -1,10 +1,11 @@
 package graft
 
 import org.apache.spark.SparkContext
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
 /** End-of-query state release shared by Bench and Verify (and available to
-  * library users between pipeline stages via [[release]]).
+  * library users between pipeline stages via [[release]]), plus the
+  * bounded driver collect ([[collectBounded]]).
   *
   * Two block families outlive a finished query:
   *   - SQL-cached frames (`df.cache()` inside a query): dropped by
@@ -61,6 +62,19 @@ object Hygiene {
     * noise. Skip it when the frame already reports a storage level. */
   def cacheOnce(df: DataFrame): DataFrame =
     if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE) df.cache() else df
+
+  /** `df.collect()` for a driver collect that must stay metadata-sized:
+    * reads at most `maxRows + 1` rows (`limit`) and fails loudly, naming
+    * `what`, when there are more than `maxRows`, instead of pulling an
+    * unbounded result into driver memory. */
+  def collectBounded(df: DataFrame, maxRows: Int, what: String): Array[Row] = {
+    require(maxRows >= 0 && maxRows < Int.MaxValue, s"$what: bad row bound $maxRows")
+    val rows = df.limit(maxRows + 1).collect()
+    if (rows.length > maxRows)
+      throw new IllegalStateException(
+        s"$what: driver collect exceeds its bound of $maxRows rows")
+    rows
+  }
 
   /** Bytes of storage (memory + disk) currently held by persisted RDDs —
     * the accumulation signal Bench reports per run. */

@@ -37,8 +37,16 @@ import org.apache.spark.sql.functions._
   * Output: input columns + `grank` (1-based in-group rank) + `gn`
   * (group row count). Input columns named pid/rn/c/off/grank/gn would
   * collide with the internals — rename first.
+  *
+  * Bound: the offsets collect holds at most `numParts × #groups` rows
+  * and fails loudly (Hygiene.collectBounded) past `numParts ×`
+  * [[MaxGroups]] rows.
   */
 object Ranks {
+  /** The group count groupedRank's driver collect is sized for: it ranks
+    * within low-cardinality groups (priorities, sources, query ids). */
+  val MaxGroups = 4096
+
   def groupedRank(df: DataFrame, grp: String, numParts: Int, orderKeys: Column*): DataFrame = {
     val keys = col(grp) +: orderKeys
     val ranked = df
@@ -60,7 +68,10 @@ object Ranks {
     // pids within the group (the exclusive prefix sum the window
     // computed), gn = Σ c over the group. Longs cannot wrap here — they
     // are row counts.
-    val cnts = ranked.groupBy(col("pid"), col(grp)).agg(count(lit(1)).as("c")).collect()
+    val cnts = graft.Hygiene.collectBounded(
+      ranked.groupBy(col("pid"), col(grp)).agg(count(lit(1)).as("c")),
+      Math.multiplyExact(numParts, MaxGroups),
+      s"Ranks.groupedRank per-(pid, $grp) offsets")
     val dimRows: Seq[org.apache.spark.sql.Row] = cnts
       .groupBy(_.get(1))
       .toSeq
